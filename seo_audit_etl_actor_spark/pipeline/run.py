@@ -1,11 +1,18 @@
 """Pipeline orchestration: the reference's `processZip` re-expressed as
 driver orchestration over per-source Spark stanzas (SURVEY §3.2, §3.4).
 
-Flow: fetch → PK validation → unzip → per-source stanzas in reference
-order (each one Spark aggregation job) → coverage-weighted scoring →
-{normalized_audit, scores, manifest}. Cross-stanza dependencies are
-exactly the reference's: the errors.* `+=` accumulation (A11) and the
-pages_total coalesce priority (A12) — everything else is independent.
+Flow: fetch → PK validation → unzip → driver-side parse of every entry →
+per-source stanzas in reference order (one Spark aggregation per stanza)
+→ coverage-weighted scoring → {normalized_audit, scores, manifest}.
+Cross-stanza dependencies are exactly the reference's: the errors.* `+=`
+accumulation (A11) and the pages_total coalesce priority (A12) —
+everything else is independent.
+
+Row counts and the login-wall placeholder check are driver facts: the
+manifest `rows`, every "has rows" test and the first-row `status` /
+`message` lookup read the `ParsedCsv` the driver already holds, so none
+of them costs a Spark job. Only an entry a stanza aggregates becomes a
+DataFrame (`to_dataframe`).
 
 Citations: /root/reference/src/main.js:4-41, src/etl.js:93-454.
 """
@@ -17,7 +24,6 @@ from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.pipeline import stanzas
 from seo_audit_etl_actor_spark.pipeline.document import (
@@ -26,8 +32,9 @@ from seo_audit_etl_actor_spark.pipeline.document import (
 )
 from seo_audit_etl_actor_spark.pipeline.scoring import compute_scores
 from seo_audit_etl_actor_spark.sources.csv_smart import (
-    parse_csv_smart,
+    ParsedCsv,
     parse_csv_smart_rows,
+    to_dataframe,
 )
 from seo_audit_etl_actor_spark.sources.lighthouse import extract_lighthouse
 from seo_audit_etl_actor_spark.sources.zip_io import (
@@ -78,8 +85,21 @@ class JobInput:
             raise ValueError(f"Missing required input: {', '.join(missing)}")
 
 
-def _parse(spark: SparkSession, buf: bytes) -> DataFrame | None:
-    return parse_csv_smart(spark, buf)
+def _frame_rows(parsed: ParsedCsv) -> int:
+    """Rows an entry holds: none without a header, where `to_dataframe`
+    builds no frame."""
+    return len(parsed.rows) if parsed.header else 0
+
+
+def _login_wall(parsed: ParsedCsv) -> bool:
+    """Login-wall placeholder: the first row has truthy `status` AND
+    `message` fields — exact keys, no fuzzy match (P10, src/etl.js:372).
+    A missing cell (NULL) and an empty one ('') are both falsy in JS."""
+    header = parsed.header
+    if not parsed.rows or "status" not in header or "message" not in header:
+        return False
+    first = parsed.rows[0]
+    return bool(first[header.index("status")]) and bool(first[header.index("message")])
 
 
 def process_zip(
@@ -100,16 +120,19 @@ def process_zip(
     doc = empty_normalized(job.client, job.domain, job.run_date)
     prov = doc["provenance"]
 
+    def parse_entry(name: str) -> ParsedCsv | None:
+        buf = read_entry(zf, name, manifest)
+        return None if buf is None else parse_csv_smart_rows(buf)
+
     def csv_stanza(name: str, apply) -> None:
         """Shared shape: read entry → parse → rows>0 → stanza + rows count;
         empty parse → 'partial' (src/etl.js:149,164,180,229)."""
-        buf = read_entry(zf, name, manifest)
-        if buf is None:
+        parsed = parse_entry(name)
+        if parsed is None:
             return
-        df = _parse(spark, buf)
-        n = df.count() if df is not None else 0
+        n = _frame_rows(parsed)
         if n:
-            apply(df)
+            apply(to_dataframe(spark, parsed))
             manifest[name]["rows"] = n
         else:
             manifest[name]["status"] = "partial"
@@ -166,21 +189,18 @@ def process_zip(
     csv_stanza("sf_internal_all.csv", _sf_internal)
 
     # ---- Screaming Frog structured data (src/etl.js:234-250)
-    buf = read_entry(zf, "sf_structured_data.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        n = df.count() if df is not None else 0
-        if n:
-            note = stanzas.sf_structured_data(doc)
-            manifest["sf_structured_data.csv"]["rows"] = n
-            manifest["sf_structured_data.csv"]["note"] = note
-            prov["screamingfrog"] = True
+    parsed = parse_entry("sf_structured_data.csv")
+    if parsed is not None and (n := _frame_rows(parsed)):
+        note = stanzas.sf_structured_data(doc)
+        manifest["sf_structured_data.csv"]["rows"] = n
+        manifest["sf_structured_data.csv"]["note"] = note
+        prov["screamingfrog"] = True
 
     # ---- duplicates / images: row counts only (src/etl.js:253-256)
     for name in ("sf_duplicates.csv", "sf_images.csv"):
-        buf = read_entry(zf, name, manifest)
-        if buf is not None:
-            manifest[name]["rows"] = len(parse_csv_smart_rows(buf).rows)
+        parsed = parse_entry(name)
+        if parsed is not None:
+            manifest[name]["rows"] = len(parsed.rows)
 
     # ---- Lighthouse JSONs (src/etl.js:259-304)
     lh_metrics = []
@@ -214,11 +234,10 @@ def process_zip(
     csv_stanza("brightlocal_citations.csv", _citations)
 
     # ---- BrightLocal reviews — placeholder-prone (src/etl.js:369-379)
-    buf = read_entry(zf, "brightlocal_reviews.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        n = df.count() if df is not None else 0
-        if n and not stanzas.is_placeholder(df):
+    parsed = parse_entry("brightlocal_reviews.csv")
+    if parsed is not None:
+        n = _frame_rows(parsed)
+        if n and not _login_wall(parsed):
             prov["brightlocal"] = True
             manifest["brightlocal_reviews.csv"]["rows"] = n
         else:
@@ -226,85 +245,53 @@ def process_zip(
             manifest["brightlocal_reviews.csv"]["note"] = "login_required"
 
     # ---- BrightLocal GBP insights (src/etl.js:382-397)
-    buf = read_entry(zf, "brightlocal_gbp_insights.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        n = df.count() if df is not None else 0
-        if n:
-            stanzas.brightlocal_gbp_insights(df, doc)
-            prov["brightlocal"] = True
-            manifest["brightlocal_gbp_insights.csv"] = {
-                "status": "partial",
-                "rows": n,
-                "note": "public listing only; true Insights missing",
-            }
+    parsed = parse_entry("brightlocal_gbp_insights.csv")
+    if parsed is not None and (n := _frame_rows(parsed)):
+        stanzas.brightlocal_gbp_insights(to_dataframe(spark, parsed), doc)
+        prov["brightlocal"] = True
+        manifest["brightlocal_gbp_insights.csv"] = {
+            "status": "partial",
+            "rows": n,
+            "note": "public listing only; true Insights missing",
+        }
 
     # ---- GBP categories / photos (src/etl.js:400-421)
-    buf = read_entry(zf, "gbp_categories.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        if df is not None:
-            stanzas.gbp_categories(df, doc)
+    for name, stanza in (
+        ("gbp_categories.csv", stanzas.gbp_categories),
+        ("gbp_photos.csv", stanzas.gbp_photos),
+    ):
+        parsed = parse_entry(name)
+        if parsed is None:
+            continue
+        if parsed.header:
+            stanza(to_dataframe(spark, parsed), doc)
         prov["gbp_public"] = True
-        manifest["gbp_categories.csv"]["rows"] = df.count() if df is not None else 0
-
-    buf = read_entry(zf, "gbp_photos.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        if df is not None:
-            stanzas.gbp_photos(df, doc)
-        prov["gbp_public"] = True
-        manifest["gbp_photos.csv"]["rows"] = df.count() if df is not None else 0
+        manifest[name]["rows"] = _frame_rows(parsed)
 
     # ---- login-required placeholders (src/etl.js:424-434)
-    placeholder_dfs: dict[str, DataFrame | None] = {}
+    real_rows: dict[str, bool] = {}
     for name in PLACEHOLDER_FILES:
         try:
             data = zf.read(name)
         except KeyError:
             manifest[name] = {"status": "missing"}
             continue
-        df = _parse(spark, data)
-        placeholder_dfs[name] = df
-        n = df.count() if df is not None else 0
-        if n and not stanzas.is_placeholder(df):
+        parsed = parse_csv_smart_rows(data)
+        n = _frame_rows(parsed)
+        real_rows[name] = bool(n) and not _login_wall(parsed)
+        if real_rows[name]:
             manifest[name] = {"status": "full", "rows": n}
         else:
             manifest[name] = {"status": "placeholder", "note": "access_required_or_empty"}
 
     # ---- GSC/GA4 presence flags (src/etl.js:437-448)
-    def _real_rows(name: str) -> bool:
-        df = placeholder_dfs.get(name)
-        if df is None:
-            return False
-        return bool(df.count()) and not stanzas.is_placeholder(df)
-
-    if any(_real_rows(n) for n in GSC_FILES):
+    if any(real_rows.get(n) for n in GSC_FILES):
         prov["gsc"] = True
-    if any(_real_rows(n) for n in GA4_FILES):
+    if any(real_rows.get(n) for n in GA4_FILES):
         prov["ga4"] = True
 
     scores = compute_scores(spark, doc)
     return {"normalized_audit": doc, "scores": scores, "manifest": manifest}
-
-
-def manifest_df(spark: SparkSession, manifest: dict) -> DataFrame:
-    """Long-format lineage frame (SURVEY §1.4): queryable provenance,
-    writes to the same JSON."""
-    schema = T.StructType(
-        [
-            T.StructField("file", T.StringType(), False),
-            T.StructField("status", T.StringType(), True),
-            T.StructField("size", T.LongType(), True),
-            T.StructField("rows", T.LongType(), True),
-            T.StructField("note", T.StringType(), True),
-        ]
-    )
-    rows = [
-        (name, m.get("status"), m.get("size"), m.get("rows"), m.get("note"))
-        for name, m in manifest.items()
-    ]
-    return spark.createDataFrame(rows, schema)
 
 
 def write_outputs(result: dict, out_dir: str) -> dict[str, str]:

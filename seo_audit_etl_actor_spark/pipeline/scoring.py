@@ -6,7 +6,8 @@ single-row frame (the F5-F9 expression library — JS `||`-zero semantics via
 nonzero_coalesce, clamps via clamp01); the weighted aggregate is the A13
 operator over a long-format (component, weight, raw, avail) frame. Both
 run through Catalyst, so the same expressions serve a million-document
-scoring table unchanged.
+scoring table unchanged. Both frames are built from driver values as local
+Arrow-backed frames (`session.local_frame`), so no Python worker runs.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.functions.coercion import clamp01, nonzero_coalesce
 from seo_audit_etl_actor_spark.operators.aggregates import coverage_weighted_score
+from seo_audit_etl_actor_spark.session import local_frame
 
 OSS_WEIGHTS = {
     "gsc_clicks": 30,
@@ -69,7 +71,7 @@ def _raw_components(spark: SparkSession, doc: dict) -> dict[str, float | None]:
         consistency=_f(local["citations"]["consistency"]),
         avg_rating=_f(local["reviews"]["avg_rating"]),
     )
-    df = spark.createDataFrame([scalars], _SCALARS)
+    df = local_frame(spark, [scalars], _SCALARS)
 
     # kw_top10 = min((top10 || 0) / max(top100 || 1, 1), 1)   (:18-20)
     kw = F.least(
@@ -158,7 +160,7 @@ def compute_scores(spark: SparkSession, doc: dict) -> dict:
         for fam, weights in (("oss", OSS_WEIGHTS), ("lss", LSS_WEIGHTS))
         for comp, w in weights.items()
     ]
-    long_df = spark.createDataFrame(rows, _LONG)
+    long_df = local_frame(spark, rows, _LONG)
     agg = {
         r["family"]: r
         for r in coverage_weighted_score(long_df, group_cols=["family"]).collect()

@@ -219,19 +219,6 @@ def brightlocal_citations(df: DataFrame, doc: dict) -> None:
         doc["local"]["citations"]["consistency"] = row["good"] / row["total"]
 
 
-def is_placeholder(df: DataFrame) -> bool:
-    """Login-wall placeholder: the first row has truthy `status` AND
-    `message` fields — exact lowercase keys, no fuzzy match (P10,
-    src/etl.js:372)."""
-    cols = _cols(df)
-    if "status" not in cols or "message" not in cols:
-        return False
-    first = df.orderBy(ROW_ID).select("status", "message").first()
-    if first is None:
-        return False
-    return bool(first["status"]) and bool(first["message"])
-
-
 def brightlocal_gbp_insights(df: DataFrame, doc: dict) -> None:
     """max-of-coerced public listing metrics (A5 maxNum,
     src/etl.js:382-397)."""

@@ -1,4 +1,4 @@
-"""SparkSession bring-up and table loading.
+"""SparkSession bring-up, table loading, and local frames from driver rows.
 
 Tuned for the test harness (local[N], single JVM) but with settings chosen
 for cluster scale: AQE on (runtime shuffle-partition coalescing, dynamic
@@ -10,10 +10,11 @@ overrides via env.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampType
+from pyspark.sql.types import StructType, TimestampType
 
 TABLES = (
     "region",
@@ -204,6 +205,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence], schema: StructType) -> DataFrame:
+    """Driver-held rows → a DataFrame that plans as a `LocalTableScan`.
+
+    The rows cross to the JVM as one Arrow table, so no Python worker ever
+    runs for them. A list of tuples would plan as `Scan ExistingRDD` over a
+    PythonRDD instead, and every task reading it pickles its rows through a
+    Python worker. `pyarrow` is imported on first use, not at start-up."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # Keyed by (path, size, mtime_ns) per file so an in-place rewrite (same

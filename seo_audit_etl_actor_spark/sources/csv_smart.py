@@ -12,12 +12,18 @@ papaparse TooFewFields/TooManyFields analog) OR zero data rows
 (src/etl.js:23).
 
 The decode + parse happens on the driver: these are the reference's
-ZIP-of-small-CSVs inputs, where per-file drivers-side parsing is the right
-cost model (SURVEY §3.4). The result is handed to Spark as an all-string
-DataFrame with a `__row_id` ingest-order column (H2 determinism — Spark has
-no implicit file order). For big standalone CSVs use
-`read_csv_distributed`, which pushes the same encoding/delimiter decision
-into Spark's distributed CSV scan.
+ZIP-of-small-CSVs inputs, where per-file driver-side parsing is the right
+cost model (SURVEY §3.4). The parse result is what callers reason about:
+its row count and first row are driver facts, read without a Spark job.
+Only a file that a stanza aggregates is handed to Spark, as an all-string
+DataFrame with a `__row_id` ingest-order column (H2 determinism — Spark
+has no implicit file order). That frame crosses to the JVM as an Arrow
+table and plans as a `LocalTableScan`: no Python worker runs for it. A
+list of tuples would plan as `Scan ExistingRDD` over a PythonRDD, and each
+task would pickle its rows through a Python worker — for a few hundred
+rows that fixed cost is the whole cost of the stanza. For big standalone
+CSVs use `read_csv_distributed`, which pushes the same encoding/delimiter
+decision into Spark's distributed CSV scan.
 
 Deliberate divergence: papaparse emits a phantom `{col: ""}` row for a
 trailing newline; Python's csv module does not. We follow csv-module
@@ -33,6 +39,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from seo_audit_etl_actor_spark.session import local_frame
 from seo_audit_etl_actor_spark.sources.sniff import (
     looks_utf16,
     sniff_delimiter,
@@ -107,20 +114,15 @@ def parse_csv_smart_rows(buf: bytes) -> ParsedCsv:
 
 def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
     """All-string DataFrame + ingest-order `__row_id` (H2: deterministic
-    first/collect need an explicit order column)."""
+    first/collect need an explicit order column). A missing cell stays
+    NULL and an empty cell stays ''."""
     if not parsed.header:
         return None
     schema = T.StructType(
         [T.StructField(ROW_ID, T.LongType(), False)]
         + [T.StructField(h, T.StringType(), True) for h in parsed.header]
     )
-    data = [(i, *row) for i, row in enumerate(parsed.rows)]
-    return spark.createDataFrame(data, schema)
-
-
-def parse_csv_smart(spark: SparkSession, buf: bytes) -> DataFrame | None:
-    """Sniff + parse chain → Spark DataFrame (None for an empty buffer)."""
-    return to_dataframe(spark, parse_csv_smart_rows(buf))
+    return local_frame(spark, [(i, *row) for i, row in enumerate(parsed.rows)], schema)
 
 
 def read_csv_distributed(

@@ -41,7 +41,10 @@ def build_fixture_zip(
     omit: set[str] | None = None,
     corrupt_site_audit: bool = False,
     keywords_no_position_col: bool = False,
+    replace: dict[str, bytes] | None = None,
 ) -> bytes:
+    """The fixture ZIP; `omit` drops entries, `replace` swaps an entry's
+    bytes (or adds one)."""
     omit = omit or set()
     entries: dict[str, bytes] = {}
 
@@ -151,6 +154,7 @@ def build_fixture_zip(
     # ga4_conversions.csv / ga4_channels.csv missing
     entries["leadsnap_leads.csv"] = PLACEHOLDER.encode()
     # leadsnap_calls.csv / leadsnap_reviews.csv missing
+    entries.update(replace or {})
 
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as z:

@@ -206,3 +206,14 @@ def test_catalog_order_survives_new_driver_round():
         )
     finally:
         fake.unlink()
+
+
+def test_rotate_tool_rejects_unknown_arguments(capsys):
+    """An unknown argument (`--help` included) prints the usage and exits 2
+    without rewriting catalog.py."""
+    mod = _rotate_module()
+    before = mod.CATALOG.read_text()
+    for argv in (["--help"], ["--chek"], ["--check", "extra"]):
+        assert mod.main(argv) == 2
+        assert "usage" in capsys.readouterr().err
+    assert mod.CATALOG.read_text() == before

@@ -14,7 +14,7 @@ import pytest
 from seo_audit_etl_actor_spark.pipeline.document import to_reference_json
 from seo_audit_etl_actor_spark.pipeline.run import JobInput, process_zip, write_outputs
 from seo_audit_etl_actor_spark.sources.zip_io import NotAZipError
-from tests.fixtures_seo import build_fixture_zip
+from tests.fixtures_seo import _csv, build_fixture_zip
 
 JOB = JobInput(client="Acme Plumbing", domain="acme.example", run_date="2025-06-01", zip_url="memory://fixture")
 
@@ -186,6 +186,33 @@ def test_keywords_without_position_column(spark):
     # warning path: file present with rows, but buckets stay null
     assert res["manifest"]["ahrefs_keywords.csv"]["rows"] == 10
     assert res["normalized_audit"]["onsite"]["keywords"]["top10"] is None
+
+
+def test_placeholder_check_reads_exact_keys(spark):
+    """A header holding both `Status` and `status` (plus `message`): the
+    login-wall check reads the exact JS keys `status` and `message` of the
+    first row (src/etl.js:372), so `Status` plays no part. A
+    case-insensitive lookup would either fail as ambiguous or read
+    `Status` and get both files the wrong way round."""
+    # status + message truthy, Status empty → login wall
+    reviews = _csv("Status,status,message", ",error,login required", "Live,,").encode()
+    # Status + message truthy, status empty → real rows
+    gsc = _csv("Status,status,message", "error,,see logs", "ok,,", "ok,,").encode()
+    res = process_zip(
+        spark,
+        JOB,
+        fetch_impl=lambda url: build_fixture_zip(
+            replace={"brightlocal_reviews.csv": reviews, "gsc_queries_28d.csv": gsc}
+        ),
+    )
+    m = res["manifest"]
+    assert m["brightlocal_reviews.csv"] == {
+        "status": "placeholder",
+        "size": len(reviews),
+        "note": "login_required",
+    }
+    assert m["gsc_queries_28d.csv"] == {"status": "full", "rows": 3}
+    assert to_reference_json(res["normalized_audit"])["provenance"]["gsc"] == "present"
 
 
 def test_validation_rejects_blank_input():

@@ -2,16 +2,19 @@
 
 Spark round-trips are batched: each property materializes ONE DataFrame
 carrying every case (a row or group per case), so the suite stays fast
-while still sweeping hundreds of adversarial inputs.
+while still sweeping hundreds of adversarial inputs. The exception is the
+Arrow-frame round trip, whose subject is the frame built per parsed file.
 """
 
 from __future__ import annotations
 
+import io
 import math
 import random
+import zipfile
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -20,8 +23,14 @@ from seo_audit_etl_actor_spark.functions.coercion import to_num, to_num_js
 from seo_audit_etl_actor_spark.operators.aggregates import percentile_nearest_rank
 from seo_audit_etl_actor_spark.pipeline.document import empty_normalized
 from seo_audit_etl_actor_spark.pipeline.scoring import compute_scores
-from seo_audit_etl_actor_spark.sources.csv_smart import parse_csv_smart_rows
+from seo_audit_etl_actor_spark.sources.csv_smart import (
+    ROW_ID,
+    ParsedCsv,
+    parse_csv_smart_rows,
+    to_dataframe,
+)
 from seo_audit_etl_actor_spark.sources.sniff import looks_utf16
+from tests.fixtures_seo import build_fixture_zip
 
 # ---------------------------------------------------------------- toNum
 
@@ -169,6 +178,65 @@ def test_sniff_rejects_utf8_accepts_utf16():
     assert looks_utf16("plain,ascii\n1,2".encode("utf-16-le"))
     assert looks_utf16(b"\xff\xfe" + b"x")
     assert looks_utf16(b"\xfe\xff" + b"x")
+
+
+# ---------------------------------------------------------------- Arrow frames
+
+_NAME_CHARS = st.characters(
+    blacklist_categories=("Cs", "Cc"), blacklist_characters=',;|"\ufeff'
+)
+_HEADER_NAMES = st.sampled_from(["x", "x", "x_1", "Status", "status", "é", "ключ", "列名", ""]) | st.text(
+    _NAME_CHARS, max_size=5
+)
+_CELLS = st.none() | st.just("") | st.text(max_size=6)
+
+
+@st.composite
+def _parsed_csvs(draw) -> ParsedCsv:
+    """A header as the parser delivers it (first name read from a
+    BOM-prefixed file when drawn, duplicates deduped to `x`, `x_1`, ...)
+    plus up to 5 rows whose cells may be NULL (missing), '' or text."""
+    names = draw(st.lists(_HEADER_NAMES, min_size=1, max_size=5).filter(lambda ns: ns != [""]))
+    bom = "\ufeff" if draw(st.booleans()) else ""
+    text = bom + ",".join(names) + "\n" + ",".join("1" * len(names))
+    header = parse_csv_smart_rows(text.encode("utf-8")).header
+    assert len(header) == len(names) and not header[0].startswith("\ufeff")
+    rows = draw(st.lists(st.lists(_CELLS, min_size=len(header), max_size=len(header)), max_size=5))
+    return ParsedCsv(header=header, rows=rows)
+
+
+@settings(max_examples=30, deadline=None)
+@given(parsed=_parsed_csvs())
+@example(
+    parsed=ParsedCsv(
+        header=parse_csv_smart_rows("\ufeffx,x,é\n1,2,3".encode("utf-8")).header,
+        rows=[[None, "", "ü"], ["a", None, ""]],
+    )
+)
+@example(parsed=ParsedCsv(header=["ключ", "x"], rows=[]))
+def test_to_dataframe_round_trips_parsed_rows(spark, parsed):
+    """The Arrow-built frame holds exactly the parsed cells in ingest
+    order — a missing cell stays NULL, an empty one stays '' — under the
+    all-string schema with a non-null `__row_id`."""
+    df = to_dataframe(spark, parsed)
+    assert df.schema == T.StructType(
+        [T.StructField(ROW_ID, T.LongType(), False)]
+        + [T.StructField(h, T.StringType(), True) for h in parsed.header]
+    )
+    got = [tuple(r) for r in df.orderBy(ROW_ID).collect()]
+    assert got == [(i, *row) for i, row in enumerate(parsed.rows)]
+
+
+def test_fixture_frames_plan_as_local_table_scans(spark):
+    """Every CSV export of the golden fixture becomes a `LocalTableScan`:
+    no `Scan ExistingRDD`, so no Python worker pickles its rows."""
+    with zipfile.ZipFile(io.BytesIO(build_fixture_zip())) as zf:
+        names = [n for n in zf.namelist() if n.endswith(".csv")]
+        frames = {n: to_dataframe(spark, parse_csv_smart_rows(zf.read(n))) for n in names}
+    assert len(frames) > 10
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
 
 
 # ---------------------------------------------------------------- scoring invariants

@@ -9,6 +9,9 @@ the staleness gate at judge time); this makes it one command:
     python tools/rotate_catalog.py           # rewrite in place
     python tools/rotate_catalog.py --check   # exit 1 if order is not canonical
 
+Any other argument (`--help` included) prints the usage and exits 2
+without touching catalog.py.
+
 Only the list body between `QUERIES: list[QuerySpec] = [` and its closing
 `]` is regenerated; section comments are re-derived from the evidence so
 they can never go stale.
@@ -123,10 +126,16 @@ def rotate(src: str, max_round_cap: int | None = None) -> str:
     return head + "QUERIES: list[QuerySpec] = [\n" + "\n".join(out) + "\n]\n" + tail
 
 
-def main() -> int:
+USAGE = "usage: python tools/rotate_catalog.py [--check]"
+
+
+def main(argv: list[str]) -> int:
+    if argv not in ([], ["--check"]):
+        print(USAGE, file=sys.stderr)
+        return 2
     src = CATALOG.read_text()
     new = rotate(src)
-    if "--check" in sys.argv:
+    if argv:
         if new != src:
             print("catalog.py QUERIES order is not canonical — run tools/rotate_catalog.py")
             return 1
@@ -141,4 +150,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))
