@@ -76,10 +76,45 @@ def collect_sorted(value: Column, order: Column) -> Column:
     src/etl.js:407-409 secondary_categories keep file order).
 
     collect_list has no intra-group order guarantee; sorting an array of
-    (order, value) structs restores it without an extra shuffle.
+    (order, value) structs restores it without an extra shuffle. NULL
+    values are skipped (collect_list drops the NULL pair), so a
+    conditional `when(pred, v)` collects only the rows matching `pred`.
     """
-    pairs = F.sort_array(F.collect_list(F.struct(order.alias("o"), value.alias("v"))))
+    pair = F.struct(order.alias("o"), value.alias("v"))
+    pairs = F.sort_array(F.collect_list(F.when(value.isNotNull(), pair)))
     return F.transform(pairs, lambda s: s["v"])
+
+
+def coverage_terms(weight: Column, raw: Column, avail: Column) -> tuple[Column, Column, Column]:
+    """One component's terms of the A13 sums: (weight if usable, weight ×
+    raw if usable, weight); usable = available and raw non-null
+    (reference src/scoring.js:38-43)."""
+    usable = avail & raw.isNotNull()
+    return (
+        F.when(usable, weight).otherwise(F.lit(0.0)),
+        F.when(usable, weight * raw).otherwise(F.lit(0.0)),
+        weight,
+    )
+
+
+def coverage_weighted(used: Column, acc: Column, total: Column) -> list[Column]:
+    """The A13 result from the summed `coverage_terms` (reference
+    src/scoring.js:38-46, 73-74): `score`, `coverage`, `weight_used`,
+    `weight_total`.
+
+    score = round(Σ wᵢ·rawᵢ / Σ wᵢ over available & non-null components
+            × 1000) / 10 ; degenerate used=0 → 0 (src/scoring.js:44).
+    coverage = used_weight / total_weight, rounded to 0.01
+    (src/scoring.js:73-74). JS Math.round is half-away-from-zero on the
+    non-negative values seen here == Spark HALF_UP `round`.
+    """
+    score = F.coalesce(F.round(acc / F.nullif(used, F.lit(0.0)) * 1000) / 10, F.lit(0.0))
+    return [
+        score.alias("score"),
+        F.round(used / total, 2).alias("coverage"),
+        used.cast("double").alias("weight_used"),
+        total.cast("double").alias("weight_total"),
+    ]
 
 
 def coverage_weighted_score(
@@ -91,23 +126,6 @@ def coverage_weighted_score(
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Coverage-weighted composite score over a long-format component frame
-    (A13; reference src/scoring.js:38-46).
-
-    score = round(Σ wᵢ·rawᵢ / Σ wᵢ over available & non-null components
-            × 1000) / 10 ; degenerate used=0 → 0 (src/scoring.js:44).
-    coverage = used_weight / total_weight, rounded to 0.01
-    (src/scoring.js:73-74). JS Math.round is half-away-from-zero on the
-    non-negative values seen here == Spark HALF_UP `round`.
-    """
-    usable = F.col(avail) & F.col(raw).isNotNull()
-    w, r = F.col(weight), F.col(raw)
-    used = F.sum(F.when(usable, w).otherwise(F.lit(0.0)))
-    acc = F.sum(F.when(usable, w * r).otherwise(F.lit(0.0)))
-    total = F.sum(w)
-    score = F.coalesce(F.round(acc / F.nullif(used, F.lit(0.0)) * 1000) / 10, F.lit(0.0))
-    return df.groupBy(*group_cols).agg(
-        score.alias("score"),
-        F.round(used / total, 2).alias("coverage"),
-        used.cast("double").alias("weight_used"),
-        total.cast("double").alias("weight_total"),
-    )
+    (A13, `coverage_weighted`), one row per `group_cols` group."""
+    terms = coverage_terms(F.col(weight), F.col(raw), F.col(avail))
+    return df.groupBy(*group_cols).agg(*coverage_weighted(*[F.sum(t) for t in terms]))

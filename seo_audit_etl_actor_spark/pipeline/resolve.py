@@ -1,6 +1,6 @@
 """Fuzzy column resolution (SURVEY §2.2 P1).
 
-Schema resolution is driver metadata work over `df.columns` — cheap,
+Schema resolution is driver metadata work over the parsed header — cheap,
 identical semantics at any scale (/root/reference/src/etl.js:44-72):
 normalize every header (NBSP→space, collapse whitespace, trim, lowercase)
 into two lookup maps (normalized, and no-space normalized); walk the
@@ -26,14 +26,16 @@ def norm_nospace(s: str | None) -> str:
     return re.sub(r"\s+", "", norm(s))
 
 
-def pick_col(columns: list[str], candidates: list[str]) -> str | None:
-    """Return the original column name matching the highest-priority
-    candidate, or None."""
-    lookup: dict[str, str] = {}
-    lookup_nospace: dict[str, str] = {}
-    for c in columns:
-        lookup[norm(c)] = c
-        lookup_nospace[norm_nospace(c)] = c
+def pick_col(columns: list[str], candidates: list[str]) -> int | None:
+    """Return the position of the column matching the highest-priority
+    candidate, or None. A position, not a name: two headers that differ
+    only in case (`Status`, `status`) stay apart, where a name lookup in
+    Spark's case-insensitive resolver would be ambiguous."""
+    lookup: dict[str, int] = {}
+    lookup_nospace: dict[str, int] = {}
+    for i, c in enumerate(columns):
+        lookup[norm(c)] = i
+        lookup_nospace[norm_nospace(c)] = i
     for want in candidates:
         w, ws = norm(want), norm_nospace(want)
         if w in lookup:
@@ -41,3 +43,4 @@ def pick_col(columns: list[str], candidates: list[str]) -> str | None:
         if ws in lookup_nospace:
             return lookup_nospace[ws]
     return None
+

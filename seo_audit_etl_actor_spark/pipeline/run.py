@@ -2,17 +2,18 @@
 driver orchestration over per-source Spark stanzas (SURVEY §3.2, §3.4).
 
 Flow: fetch → PK validation → unzip → driver-side parse of every entry →
-per-source stanzas in reference order (one Spark aggregation per stanza)
-→ coverage-weighted scoring → {normalized_audit, scores, manifest}.
-Cross-stanza dependencies are exactly the reference's: the errors.* `+=`
-accumulation (A11) and the pages_total coalesce priority (A12) —
-everything else is independent.
+manifest and provenance in reference order, collecting the CSV entries a
+stanza aggregates as `(stanza, ParsedCsv)` pairs → ONE Spark aggregation
+for all of them (`stanzas.aggregate_audit`, applied in reference order)
+→ coverage-weighted scoring (one more Spark query) → {normalized_audit,
+scores, manifest}. Cross-stanza dependencies are exactly the reference's:
+the errors.* `+=` accumulation (A11) and the pages_total coalesce
+priority (A12) — everything else is independent.
 
 Row counts and the login-wall placeholder check are driver facts: the
 manifest `rows`, every "has rows" test and the first-row `status` /
 `message` lookup read the `ParsedCsv` the driver already holds, so none
-of them costs a Spark job. Only an entry a stanza aggregates becomes a
-DataFrame (`to_dataframe`).
+of them costs a Spark job.
 
 Citations: /root/reference/src/main.js:4-41, src/etl.js:93-454.
 """
@@ -23,7 +24,7 @@ import json
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from seo_audit_etl_actor_spark.pipeline import stanzas
 from seo_audit_etl_actor_spark.pipeline.document import (
@@ -31,11 +32,7 @@ from seo_audit_etl_actor_spark.pipeline.document import (
     to_reference_json,
 )
 from seo_audit_etl_actor_spark.pipeline.scoring import compute_scores
-from seo_audit_etl_actor_spark.sources.csv_smart import (
-    ParsedCsv,
-    parse_csv_smart_rows,
-    to_dataframe,
-)
+from seo_audit_etl_actor_spark.sources.csv_smart import ParsedCsv, parse_csv_smart_rows
 from seo_audit_etl_actor_spark.sources.lighthouse import extract_lighthouse
 from seo_audit_etl_actor_spark.sources.zip_io import (
     FetchImpl,
@@ -86,8 +83,8 @@ class JobInput:
 
 
 def _frame_rows(parsed: ParsedCsv) -> int:
-    """Rows an entry holds: none without a header, where `to_dataframe`
-    builds no frame."""
+    """Rows an entry holds: none without a header (a file whose first
+    line is blank)."""
     return len(parsed.rows) if parsed.header else 0
 
 
@@ -124,43 +121,27 @@ def process_zip(
         buf = read_entry(zf, name, manifest)
         return None if buf is None else parse_csv_smart_rows(buf)
 
-    def csv_stanza(name: str, apply) -> None:
+    entries: list[tuple[str, ParsedCsv]] = []  # CSV stanza inputs, reference order
+
+    def csv_stanza(name: str, stanza: str, source: str) -> None:
         """Shared shape: read entry → parse → rows>0 → stanza + rows count;
         empty parse → 'partial' (src/etl.js:149,164,180,229)."""
         parsed = parse_entry(name)
         if parsed is None:
             return
-        n = _frame_rows(parsed)
-        if n:
-            apply(to_dataframe(spark, parsed))
+        if n := _frame_rows(parsed):
+            entries.append((stanza, parsed))
             manifest[name]["rows"] = n
+            prov[source] = True
         else:
             manifest[name]["status"] = "partial"
 
-    # ---- Ahrefs keywords (src/etl.js:115-151)
-    def _keywords(df: DataFrame) -> None:
-        if debug is not None:  # S8 headers dump (src/etl.js:121)
-            debug["ahrefs_keywords_headers"] = [
-                c for c in df.columns if c != "__row_id"
-            ]
-        stanzas.ahrefs_keywords(df, doc)
-        prov["ahrefs"] = True
-
-    csv_stanza("ahrefs_keywords.csv", _keywords)
-
-    # ---- Ahrefs top pages (src/etl.js:153-165)
-    def _top_pages(df: DataFrame) -> None:
-        stanzas.ahrefs_top_pages(df, doc)
-        prov["ahrefs"] = True
-
-    csv_stanza("ahrefs_top_pages.csv", _top_pages)
-
-    # ---- Ahrefs backlinks (src/etl.js:168-181)
-    def _backlinks(df: DataFrame) -> None:
-        stanzas.ahrefs_backlinks(df, doc)
-        prov["ahrefs"] = True
-
-    csv_stanza("ahrefs_backlinks.csv", _backlinks)
+    # ---- Ahrefs keywords / top pages / backlinks (src/etl.js:115-181)
+    csv_stanza("ahrefs_keywords.csv", "ahrefs_keywords", "ahrefs")
+    if debug is not None and entries:  # S8 headers dump (src/etl.js:121)
+        debug["ahrefs_keywords_headers"] = list(entries[0][1].header)
+    csv_stanza("ahrefs_top_pages.csv", "ahrefs_top_pages", "ahrefs")
+    csv_stanza("ahrefs_backlinks.csv", "ahrefs_backlinks", "ahrefs")
 
     # ---- Ahrefs site audit — nested ZIP (src/etl.js:184-213)
     buf = read_entry(zf, "ahrefs_site_audit.zip", manifest)
@@ -182,11 +163,7 @@ def process_zip(
             manifest["ahrefs_site_audit.zip"]["note"] = str(e)
 
     # ---- Screaming Frog internal (src/etl.js:216-230)
-    def _sf_internal(df: DataFrame) -> None:
-        prov["screamingfrog"] = True
-        stanzas.sf_internal(df, doc)
-
-    csv_stanza("sf_internal_all.csv", _sf_internal)
+    csv_stanza("sf_internal_all.csv", "sf_internal", "screamingfrog")
 
     # ---- Screaming Frog structured data (src/etl.js:234-250)
     parsed = parse_entry("sf_structured_data.csv")
@@ -219,19 +196,9 @@ def process_zip(
     if lh_metrics:
         stanzas.lighthouse_rollup(lh_metrics, doc)
 
-    # ---- BrightLocal ranks (src/etl.js:307-328)
-    def _ranks(df: DataFrame) -> None:
-        prov["brightlocal"] = True
-        stanzas.brightlocal_ranks(df, doc)
-
-    csv_stanza("brightlocal_ranks.csv", _ranks)
-
-    # ---- BrightLocal citations (src/etl.js:332-366)
-    def _citations(df: DataFrame) -> None:
-        prov["brightlocal"] = True
-        stanzas.brightlocal_citations(df, doc)
-
-    csv_stanza("brightlocal_citations.csv", _citations)
+    # ---- BrightLocal ranks / citations (src/etl.js:307-366)
+    csv_stanza("brightlocal_ranks.csv", "brightlocal_ranks", "brightlocal")
+    csv_stanza("brightlocal_citations.csv", "brightlocal_citations", "brightlocal")
 
     # ---- BrightLocal reviews — placeholder-prone (src/etl.js:369-379)
     parsed = parse_entry("brightlocal_reviews.csv")
@@ -247,7 +214,7 @@ def process_zip(
     # ---- BrightLocal GBP insights (src/etl.js:382-397)
     parsed = parse_entry("brightlocal_gbp_insights.csv")
     if parsed is not None and (n := _frame_rows(parsed)):
-        stanzas.brightlocal_gbp_insights(to_dataframe(spark, parsed), doc)
+        entries.append(("brightlocal_gbp_insights", parsed))
         prov["brightlocal"] = True
         manifest["brightlocal_gbp_insights.csv"] = {
             "status": "partial",
@@ -256,15 +223,12 @@ def process_zip(
         }
 
     # ---- GBP categories / photos (src/etl.js:400-421)
-    for name, stanza in (
-        ("gbp_categories.csv", stanzas.gbp_categories),
-        ("gbp_photos.csv", stanzas.gbp_photos),
-    ):
+    for name, stanza in (("gbp_categories.csv", "gbp_categories"), ("gbp_photos.csv", "gbp_photos")):
         parsed = parse_entry(name)
         if parsed is None:
             continue
         if parsed.header:
-            stanza(to_dataframe(spark, parsed), doc)
+            entries.append((stanza, parsed))
         prov["gbp_public"] = True
         manifest[name]["rows"] = _frame_rows(parsed)
 
@@ -290,6 +254,7 @@ def process_zip(
     if any(real_rows.get(n) for n in GA4_FILES):
         prov["ga4"] = True
 
+    stanzas.aggregate_audit(spark, entries, doc)
     scores = compute_scores(spark, doc)
     return {"normalized_audit": doc, "scores": scores, "manifest": manifest}
 

@@ -1,23 +1,33 @@
 """Coverage-weighted OSS/LSS scoring (SURVEY §3.3; reference
 /root/reference/src/scoring.js:1-77).
 
-The raw component derivations are Spark Column expressions over a
-single-row frame (the F5-F9 expression library — JS `||`-zero semantics via
-nonzero_coalesce, clamps via clamp01); the weighted aggregate is the A13
-operator over a long-format (component, weight, raw, avail) frame. Both
-run through Catalyst, so the same expressions serve a million-document
-scoring table unchanged. Both frames are built from driver values as local
-Arrow-backed frames (`session.local_frame`), so no Python worker runs.
+Scoring is ONE Spark query. The driver puts the document's scalars and
+the availability flags into one single-row local Arrow-backed frame
+(`session.local_frame`, no Python worker). One projection over it
+derives the raw components (the F5-F9 expression library — JS `||`-zero
+semantics via nonzero_coalesce, clamps via clamp01) and scores each
+family with the A13 formula (`coverage_terms` summed over the family's
+components, then `coverage_weighted`); the raw components come back in
+the same row. The expressions are built once per process.
+
+A projection, not a group-by over long-format rows: an aggregate shuffles,
+and under AQE a shuffle is one more Spark job per audit, while a
+projection over a local relation is folded on the driver by Catalyst
+(ConvertToLocalRelation) and runs no job. The same projection scores a
+million-document table row by row, with no shuffle either.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Row, SparkSession
+import functools
+import operator
+
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.functions.coercion import clamp01, nonzero_coalesce
-from seo_audit_etl_actor_spark.operators.aggregates import coverage_weighted_score
+from seo_audit_etl_actor_spark.operators.aggregates import coverage_terms, coverage_weighted
 from seo_audit_etl_actor_spark.session import local_frame
 
 OSS_WEIGHTS = {
@@ -36,43 +46,49 @@ LSS_WEIGHTS = {
 }
 BAD_ERRORS_PER_PAGE = 0.5
 
-_SCALARS = T.StructType(
-    [
-        T.StructField(name, T.DoubleType(), True)
-        for name in (
-            "top10",
-            "top100",
-            "pass_rate",
-            "total_err",
-            "pages_total",
-            "avg_pos",
-            "pct_top3",
-            "consistency",
-            "avg_rating",
-        )
-    ]
+_SCALARS = (
+    "top10",
+    "top100",
+    "pass_rate",
+    "total_err",
+    "pages_total",
+    "avg_pos",
+    "pct_top3",
+    "consistency",
+    "avg_rating",
+)
+_FAMILIES = (("oss", OSS_WEIGHTS), ("lss", LSS_WEIGHTS))
+_COMPONENTS = tuple(c for _, weights in _FAMILIES for c in weights)
+_FRAME = T.StructType(
+    [T.StructField(name, T.DoubleType(), True) for name in _SCALARS]
+    + [T.StructField(f"avail_{c}", T.BooleanType(), False) for c in _COMPONENTS]
 )
 
 
-def _raw_components(spark: SparkSession, doc: dict) -> dict[str, float | None]:
-    """Raw 0..1 component scores (src/scoring.js:16-36, 59-68) as one
-    single-row Spark projection."""
-    onsite, local = doc["onsite"], doc["local"]
-    errors = onsite["errors"]
-    total_err = float(sum(v for v in errors.values() if isinstance(v, int)))
-    scalars = Row(
-        top10=_f(onsite["keywords"]["top10"]),
-        top100=_f(onsite["keywords"]["top100"]),
-        pass_rate=_f(onsite["cwv"]["pass_rate"]),
-        total_err=total_err,
-        pages_total=_f(onsite["content"]["pages_total"]),
-        avg_pos=_f(local["rank"]["avg_pos"]),
-        pct_top3=_f(local["rank"]["pct_top3"]),
-        consistency=_f(local["citations"]["consistency"]),
-        avg_rating=_f(local["reviews"]["avg_rating"]),
-    )
-    df = local_frame(spark, [scalars], _SCALARS)
+def _f(v) -> float | None:
+    return None if v is None else float(v)
 
+
+def _scalars(doc: dict) -> tuple[float | None, ...]:
+    """The document values the components derive from, in `_SCALARS` order."""
+    onsite, local = doc["onsite"], doc["local"]
+    total_err = float(sum(v for v in onsite["errors"].values() if isinstance(v, int)))
+    return (
+        _f(onsite["keywords"]["top10"]),
+        _f(onsite["keywords"]["top100"]),
+        _f(onsite["cwv"]["pass_rate"]),
+        total_err,
+        _f(onsite["content"]["pages_total"]),
+        _f(local["rank"]["avg_pos"]),
+        _f(local["rank"]["pct_top3"]),
+        _f(local["citations"]["consistency"]),
+        _f(local["reviews"]["avg_rating"]),
+    )
+
+
+def _raw_components() -> dict[str, Column]:
+    """Raw 0..1 component scores (src/scoring.js:16-36, 59-68) over the
+    scalar columns; NULL for a component with no source."""
     # kw_top10 = min((top10 || 0) / max(top100 || 1, 1), 1)   (:18-20)
     kw = F.least(
         F.coalesce(F.col("top10"), F.lit(0.0))
@@ -90,33 +106,19 @@ def _raw_components(spark: SparkSession, doc: dict) -> dict[str, float | None]:
     reviews = F.when(
         F.col("avg_rating").isNotNull(), clamp01((F.col("avg_rating") - 3.5) / 1.5)
     )
-
-    row = df.select(
-        kw.alias("kw_top10"),
-        F.col("pass_rate").alias("cwv_pass"),
-        health.alias("site_health"),
-        rank.alias("avg_local_rank"),
-        F.coalesce(F.col("pct_top3"), F.lit(0.0)).alias("pct_top3"),
-        F.col("consistency").alias("citations"),
-        reviews.alias("reviews"),
-    ).first()
-
+    none = F.lit(None).cast("double")
     return {
-        "kw_top10": row["kw_top10"],
-        "cwv_pass": row["cwv_pass"],
-        "site_health": row["site_health"],
-        "gsc_clicks": None,
-        "indexed_valid": None,
-        "avg_local_rank": row["avg_local_rank"],
-        "pct_top3": row["pct_top3"],
-        "citations": row["citations"],
-        "reviews": row["reviews"],
-        "gbp_actions": None,
+        "kw_top10": kw,
+        "cwv_pass": F.col("pass_rate"),
+        "site_health": health,
+        "gsc_clicks": none,
+        "indexed_valid": none,
+        "avg_local_rank": rank,
+        "pct_top3": F.coalesce(F.col("pct_top3"), F.lit(0.0)),
+        "citations": F.col("consistency"),
+        "reviews": reviews,
+        "gbp_actions": none,
     }
-
-
-def _f(v) -> float | None:
-    return None if v is None else float(v)
 
 
 def _availability(doc: dict) -> dict[str, bool]:
@@ -140,32 +142,27 @@ def _availability(doc: dict) -> dict[str, bool]:
     }
 
 
-_LONG = T.StructType(
-    [
-        T.StructField("family", T.StringType(), False),
-        T.StructField("component", T.StringType(), False),
-        T.StructField("weight", T.DoubleType(), False),
-        T.StructField("raw", T.DoubleType(), True),
-        T.StructField("avail", T.BooleanType(), False),
-    ]
-)
+@functools.cache
+def _score_columns() -> tuple[Column, ...]:
+    """Per family a struct of the A13 results, plus the raw components;
+    built once."""
+    raw = _raw_components()
+    families = []
+    for family, weights in _FAMILIES:
+        terms = [
+            coverage_terms(F.lit(float(w)), raw[c], F.col(f"avail_{c}")) for c, w in weights.items()
+        ]
+        sums = [functools.reduce(operator.add, column) for column in zip(*terms)]
+        families.append(F.struct(*coverage_weighted(*sums)).alias(family))
+    return (*families, F.struct(*[raw[c].alias(c) for c in _COMPONENTS]).alias("raw"))
 
 
 def compute_scores(spark: SparkSession, doc: dict) -> dict:
     """→ the reference's scores document (src/scoring.js:72-76)."""
-    raw = _raw_components(spark, doc)
     avail = _availability(doc)
-    rows = [
-        (fam, comp, float(w), raw[comp], avail[comp])
-        for fam, weights in (("oss", OSS_WEIGHTS), ("lss", LSS_WEIGHTS))
-        for comp, w in weights.items()
-    ]
-    long_df = local_frame(spark, rows, _LONG)
-    agg = {
-        r["family"]: r
-        for r in coverage_weighted_score(long_df, group_cols=["family"]).collect()
-    }
-    oss, lss = agg["oss"], agg["lss"]
+    frame = local_frame(spark, [(*_scalars(doc), *(avail[c] for c in _COMPONENTS))], _FRAME)
+    row = frame.select(*_score_columns()).first()
+    oss, lss, raw = row["oss"], row["lss"], row["raw"]
     return {
         "oss": oss["score"],
         "oss_coverage": oss["coverage"],

@@ -14,14 +14,9 @@ papaparse TooFewFields/TooManyFields analog) OR zero data rows
 The decode + parse happens on the driver: these are the reference's
 ZIP-of-small-CSVs inputs, where per-file driver-side parsing is the right
 cost model (SURVEY §3.4). The parse result is what callers reason about:
-its row count and first row are driver facts, read without a Spark job.
-Only a file that a stanza aggregates is handed to Spark, as an all-string
-DataFrame with a `__row_id` ingest-order column (H2 determinism — Spark
-has no implicit file order). That frame crosses to the JVM as an Arrow
-table and plans as a `LocalTableScan`: no Python worker runs for it. A
-list of tuples would plan as `Scan ExistingRDD` over a PythonRDD, and each
-task would pickle its rows through a Python worker — for a few hundred
-rows that fixed cost is the whole cost of the stanza. For big standalone
+its row count and first row are driver facts, read without a Spark job,
+and the cells a stanza aggregates go to Spark in the audit's one
+Arrow-backed frame (`pipeline.stanzas.audit_frame`). For big standalone
 CSVs use `read_csv_distributed`, which pushes the same encoding/delimiter
 decision into Spark's distributed CSV scan.
 
@@ -37,9 +32,7 @@ import io
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from seo_audit_etl_actor_spark.session import local_frame
 from seo_audit_etl_actor_spark.sources.sniff import (
     looks_utf16,
     sniff_delimiter,
@@ -47,7 +40,6 @@ from seo_audit_etl_actor_spark.sources.sniff import (
 )
 
 MAX_ROW_ERRORS = 5
-ROW_ID = "__row_id"
 
 
 @dataclass
@@ -110,19 +102,6 @@ def parse_csv_smart_rows(buf: bytes) -> ParsedCsv:
     if not res.bad:
         return res
     return _parse_text(text16, ",")
-
-
-def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
-    """All-string DataFrame + ingest-order `__row_id` (H2: deterministic
-    first/collect need an explicit order column). A missing cell stays
-    NULL and an empty cell stays ''."""
-    if not parsed.header:
-        return None
-    schema = T.StructType(
-        [T.StructField(ROW_ID, T.LongType(), False)]
-        + [T.StructField(h, T.StringType(), True) for h in parsed.header]
-    )
-    return local_frame(spark, [(i, *row) for i, row in enumerate(parsed.rows)], schema)
 
 
 def read_csv_distributed(

@@ -139,6 +139,7 @@ def build_fixture_zip(
         "secondary,Emergency Plumber",
         "secondary,Drainage Service",
         "secondary,",
+        "secondary",  # ragged: category_name missing (NULL)
     ).encode()
 
     entries["gbp_photos.csv"] = _csv(

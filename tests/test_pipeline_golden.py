@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from seo_audit_etl_actor_spark.pipeline import stanzas
 from seo_audit_etl_actor_spark.pipeline.document import to_reference_json
 from seo_audit_etl_actor_spark.pipeline.run import JobInput, process_zip, write_outputs
 from seo_audit_etl_actor_spark.sources.zip_io import NotAZipError
@@ -89,6 +90,8 @@ def test_local_block(result):
     assert local["reviews"]["count_total"] == pytest.approx(120)
     assert local["reviews"]["avg_rating"] == pytest.approx(4.4)
     assert local["gbp"]["primary_category"] == "Plumber"
+    # an empty name ('') and a missing one (NULL) are both skipped: the
+    # NULL values of non-matching rows never reach the collected list
     assert local["gbp"]["secondary_categories"] == ["Emergency Plumber", "Drainage Service"]
     # gbp_photos 'total' row overwrites the insights max (35 → 42)
     assert local["gbp"]["photos_total"] == pytest.approx(42)
@@ -213,6 +216,72 @@ def test_placeholder_check_reads_exact_keys(spark):
     }
     assert m["gsc_queries_28d.csv"] == {"status": "full", "rows": 3}
     assert to_reference_json(res["normalized_audit"])["provenance"]["gsc"] == "present"
+
+
+def test_pick_col_stanzas_tolerate_case_collisions(spark):
+    """Headers holding both `Status` and `status`: the fuzzy pick keeps the
+    reference's last-wins Map.set (src/etl.js:44-72), so the later `status`
+    column is the one read. It is read by position, so Spark's
+    case-insensitive resolver never has to choose between the two names."""
+    sf = _csv("Address,Status,status", "/p1,200,OK", "/p2,404,Client Error", "/p3,200,503").encode()
+    citations = _csv(
+        "Directory,Status,status,Citation Link",
+        "d1,Live,Dead,",
+        "d2,Dead,Live,",
+        "d3,Live,,",
+        "d4,,Pending,http://x",
+    ).encode()
+    res = process_zip(
+        spark,
+        JOB,
+        fetch_impl=lambda url: build_fixture_zip(
+            replace={"sf_internal_all.csv": sf, "brightlocal_citations.csv": citations}
+        ),
+    )
+    doc = res["normalized_audit"]
+    # site audit: 4xx 3, 5xx 1; `status` adds 'OK' → 0, 'Client Error' → 0
+    # (nothing), 503 → +1 5xx; `Status` (200, 404, 200) plays no part
+    assert doc["onsite"]["errors"]["4xx"] == 3
+    assert doc["onsite"]["errors"]["5xx"] == 2
+    # `status`: dead (counted), live (good), '' (uncounted), pending with
+    # a link (good) → 2 of 3
+    assert doc["local"]["citations"]["consistency"] == pytest.approx(2 / 3)
+
+
+def test_audit_runs_two_spark_queries(spark, monkeypatch):
+    """A warm audit of the golden fixture runs at most 3 Spark jobs: one
+    aggregation for every CSV stanza (under AQE, a job for its shuffle map
+    stage and one for its result) and one scoring projection, which
+    Catalyst folds into a local relation. Its audit frame plans as a
+    `LocalTableScan`, not `Scan ExistingRDD`, so no Python worker pickles
+    its rows."""
+
+    def fetch(url):
+        return build_fixture_zip()
+
+    process_zip(spark, JOB, fetch_impl=fetch)  # warm-up
+    frames = []
+    build = stanzas.audit_frame
+
+    def recording(*args):
+        frames.append(build(*args))
+        return frames[-1]
+
+    monkeypatch.setattr(stanzas, "audit_frame", recording)
+    sc = spark.sparkContext
+    group = "test-audit-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        process_zip(spark, JOB, fetch_impl=fetch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 3, jobs
+    [frame] = frames
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_validation_rejects_blank_input():

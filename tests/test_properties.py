@@ -23,12 +23,8 @@ from seo_audit_etl_actor_spark.functions.coercion import to_num, to_num_js
 from seo_audit_etl_actor_spark.operators.aggregates import percentile_nearest_rank
 from seo_audit_etl_actor_spark.pipeline.document import empty_normalized
 from seo_audit_etl_actor_spark.pipeline.scoring import compute_scores
-from seo_audit_etl_actor_spark.sources.csv_smart import (
-    ROW_ID,
-    ParsedCsv,
-    parse_csv_smart_rows,
-    to_dataframe,
-)
+from seo_audit_etl_actor_spark.pipeline.stanzas import ROW_ID, TAG, audit_frame
+from seo_audit_etl_actor_spark.sources.csv_smart import ParsedCsv, parse_csv_smart_rows
 from seo_audit_etl_actor_spark.sources.sniff import looks_utf16
 from tests.fixtures_seo import build_fixture_zip
 
@@ -215,16 +211,17 @@ def _parsed_csvs(draw) -> ParsedCsv:
 )
 @example(parsed=ParsedCsv(header=["ключ", "x"], rows=[]))
 def test_to_dataframe_round_trips_parsed_rows(spark, parsed):
-    """The Arrow-built frame holds exactly the parsed cells in ingest
-    order — a missing cell stays NULL, an empty one stays '' — under the
-    all-string schema with a non-null `__row_id`."""
-    df = to_dataframe(spark, parsed)
+    """The Arrow-built audit frame, every column picked, holds exactly the
+    parsed cells in ingest order — a missing cell stays NULL, an empty one
+    stays '' — under the all-string slot schema with a non-null `__stanza`
+    tag and `__row_id`."""
+    df = audit_frame(spark, [("t", parsed, range(len(parsed.header)))])
     assert df.schema == T.StructType(
-        [T.StructField(ROW_ID, T.LongType(), False)]
-        + [T.StructField(h, T.StringType(), True) for h in parsed.header]
+        [T.StructField(TAG, T.StringType(), False), T.StructField(ROW_ID, T.LongType(), False)]
+        + [T.StructField(f"__c{i}", T.StringType(), True) for i in range(len(parsed.header))]
     )
     got = [tuple(r) for r in df.orderBy(ROW_ID).collect()]
-    assert got == [(i, *row) for i, row in enumerate(parsed.rows)]
+    assert got == [("t", i, *row) for i, row in enumerate(parsed.rows)]
 
 
 def test_fixture_frames_plan_as_local_table_scans(spark):
@@ -232,7 +229,8 @@ def test_fixture_frames_plan_as_local_table_scans(spark):
     no `Scan ExistingRDD`, so no Python worker pickles its rows."""
     with zipfile.ZipFile(io.BytesIO(build_fixture_zip())) as zf:
         names = [n for n in zf.namelist() if n.endswith(".csv")]
-        frames = {n: to_dataframe(spark, parse_csv_smart_rows(zf.read(n))) for n in names}
+        parsed = {n: parse_csv_smart_rows(zf.read(n)) for n in names}
+    frames = {n: audit_frame(spark, [(n, p, range(len(p.header)))]) for n, p in parsed.items()}
     assert len(frames) > 10
     for name, df in frames.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
