@@ -182,10 +182,8 @@ def process_zip(
     # ---- Lighthouse JSONs (src/etl.js:259-304)
     lh_metrics = []
     for name in LIGHTHOUSE_FILES:
-        try:
-            data = zf.read(name)
-        except KeyError:
-            manifest[name] = {"status": "missing"}
+        data = read_entry(zf, name, manifest)
+        if data is None:
             continue
         try:
             lh_metrics.append(extract_lighthouse(data))
@@ -235,12 +233,9 @@ def process_zip(
     # ---- login-required placeholders (src/etl.js:424-434)
     real_rows: dict[str, bool] = {}
     for name in PLACEHOLDER_FILES:
-        try:
-            data = zf.read(name)
-        except KeyError:
-            manifest[name] = {"status": "missing"}
+        parsed = parse_entry(name)
+        if parsed is None:
             continue
-        parsed = parse_csv_smart_rows(data)
         n = _frame_rows(parsed)
         real_rows[name] = bool(n) and not _login_wall(parsed)
         if real_rows[name]:

@@ -160,8 +160,9 @@ def _score_columns() -> tuple[Column, ...]:
 def compute_scores(spark: SparkSession, doc: dict) -> dict:
     """→ the reference's scores document (src/scoring.js:72-76)."""
     avail = _availability(doc)
-    frame = local_frame(spark, [(*_scalars(doc), *(avail[c] for c in _COMPONENTS))], _FRAME)
-    row = frame.select(*_score_columns()).first()
+    values = (*_scalars(doc), *(avail[c] for c in _COMPONENTS))
+    frame = local_frame(spark, [[[v]] for v in values], _FRAME)
+    row = frame.select(*_score_columns()).collect()[0]
     oss, lss, raw = row["oss"], row["lss"], row["raw"]
     return {
         "oss": oss["score"],

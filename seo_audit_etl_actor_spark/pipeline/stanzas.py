@@ -13,11 +13,16 @@ A CSV stanza has three parts:
 
 `aggregate_audit` does the rest: it builds one Arrow-backed frame per
 audit (`audit_frame`: a `__stanza` tag, the ingest-order `__row_id` and
-the picked cells), projects each numeric slot through `to_num_js` once,
-runs one `agg().first()` and applies the results in reference order, so
-the errors.* `+=` accumulation (A11) and the pages_total `??` coalesce
-(A12) see the reference's order. Map-side partial aggregation keeps the
-query one pass over the frame however large an export grows.
+the picked cells, handed over column by column), projects each numeric
+slot through `to_num_js` once, runs one `agg().collect()` and applies
+the results in reference order, so the errors.* `+=` accumulation (A11)
+and the pages_total `??` coalesce (A12) see the reference's order.
+
+The frame has one partition per `session.ROWS_PER_PARTITION` rows, at
+most `defaultParallelism`. A small audit's frame is one partition, so
+the aggregate needs no shuffle and the audit is one Spark job of one
+task; a large export spreads over the cores, and map-side partial
+aggregation keeps the query one pass over the frame.
 
 Citations are `file:line` into /root/reference/.
 """
@@ -25,6 +30,7 @@ Citations are `file:line` into /root/reference/.
 from __future__ import annotations
 
 import functools
+import operator
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
@@ -415,20 +421,30 @@ def audit_frame(
     the entry (H2: deterministic first/collect need an explicit order
     column) and one string slot `__c{i}` per position. A missing cell
     stays NULL, an empty one stays '', and a None position (an input the
-    header lacks) or a slot past a part's positions reads NULL."""
+    header lacks) or a slot past a part's positions reads NULL.
+
+    Built column by column: per part, one Arrow array per column straight
+    from the parsed rows, chunked by part; no row tuple is built."""
+    import pyarrow as pa
+
     width = max((len(positions) for _, _, positions in parts), default=0)
     schema = T.StructType(
         [T.StructField(TAG, T.StringType(), False), T.StructField(ROW_ID, T.LongType(), False)]
         + [T.StructField(f"__c{i}", T.StringType(), True) for i in range(width)]
     )
-    rows = []
+    columns: list[list] = [[] for _ in range(2 + width)]
     for tag, parsed, positions in parts:
+        rows, n = parsed.rows, len(parsed.rows)
+        columns[0].append(pa.repeat(pa.scalar(tag, pa.string()), n))
+        columns[1].append(pa.array(range(n), pa.int64()))
         picked = [*positions, *[None] * (width - len(positions))]
-        rows.extend(
-            (tag, i, *[None if p is None else row[p] for p in picked])
-            for i, row in enumerate(parsed.rows)
-        )
-    return local_frame(spark, rows, schema)
+        for column, p in zip(columns[2:], picked):
+            column.append(
+                pa.nulls(n, pa.string())
+                if p is None
+                else pa.array(map(operator.itemgetter(p), rows), pa.string(), size=n)
+            )
+    return local_frame(spark, columns, schema)
 
 
 def aggregate_audit(
@@ -452,6 +468,6 @@ def aggregate_audit(
     if aggs:
         width = max(len(positions) for _, _, positions in parts)
         frame = audit_frame(spark, parts).select("*", *_numeric_slots(width))
-        values = iter(frame.agg(*aggs).first())
+        values = iter(frame.agg(*aggs).collect()[0])
     for apply, keys, rows in applies:
         apply({k: next(values) for k in keys}, rows, doc)

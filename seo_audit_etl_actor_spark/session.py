@@ -31,6 +31,16 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Rows per partition of a `local_frame` (see there), chosen by a sweep of
+# the stanza query in `tools/bench_large_audit.py` on a 4-CPU host. Below
+# the Arrow local-relation threshold (a `LocalTableScan`), splitting gained
+# nothing and added a shuffle: 3×10⁵ rows took 2.3–2.4 s on one partition
+# against 3.7–4.3 s on three or four, 6×10⁵ rows 3.3–4.1 s against
+# 4.3–5.0 s on four. Past it, at 1.5×10⁶ rows, partitions paid: 2.4–2.7 s
+# on four, 2.9–3.2 s on two or three, 3.5–3.8 s on one. 10⁶ keeps the
+# former whole and splits the latter.
+ROWS_PER_PARTITION = 1_000_000
+
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via `addPyFile`.
@@ -207,23 +217,39 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def local_frame(spark: SparkSession, rows: Sequence[Sequence], schema: StructType) -> DataFrame:
-    """Driver-held rows → a DataFrame that plans as a `LocalTableScan`.
+def local_frame(spark: SparkSession, columns: Sequence[Sequence], schema: StructType) -> DataFrame:
+    """Driver-held columns → a DataFrame that plans as a `LocalTableScan`.
 
-    The rows cross to the JVM as one Arrow table, so no Python worker ever
-    runs for them. A list of tuples would plan as `Scan ExistingRDD` over a
-    PythonRDD instead, and every task reading it pickles its rows through a
-    Python worker. `pyarrow` is imported on first use, not at start-up."""
+    `columns[i]` holds field i's chunks, in order: Arrow arrays or Python
+    sequences, each of `schema`'s type for that field (a one-row frame
+    passes `[[value]]`). They cross to the JVM as one Arrow table, column
+    by column, so no Python worker ever runs for them and no row tuple is
+    built; a list of tuples would plan as `Scan ExistingRDD` over a
+    PythonRDD, and every task reading it would pickle its rows through a
+    Python worker. `pyarrow` is imported on first use, not at start-up.
+
+    A `LocalTableScan` splits its rows over `min(rows, defaultParallelism)`
+    partitions, one task each, whatever their size; past
+    `spark.sql.execution.arrow.localRelationThreshold` (48 MB of Arrow
+    data) the frame is instead a `Scan ExistingRDD arrow` with one
+    partition per Arrow batch. Either way the frame is coalesced to one
+    partition per `ROWS_PER_PARTITION` rows, at most `defaultParallelism`:
+    a small frame is then one partition, which a global aggregate reads in
+    one task and one job with no shuffle, and a large one still spreads
+    over the cores. A one-row frame is left alone, so Catalyst can still
+    fold a projection over it on the driver."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
-    columns = list(zip(*rows)) or [()] * len(arrow_schema)
     table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        [pa.chunked_array(chunks, type=f.type) for chunks, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+    df = spark.createDataFrame(table, schema)
+    parallelism = spark.sparkContext.defaultParallelism
+    partitions = max(1, min(parallelism, -(-table.num_rows // ROWS_PER_PARTITION)))
+    return df.coalesce(partitions) if table.num_rows > 1 else df
 
 
 # Keyed by (path, size, mtime_ns) per file so an in-place rewrite (same

@@ -11,6 +11,7 @@ from __future__ import annotations
 import io
 import urllib.request
 import zipfile
+import zlib
 from typing import Callable
 
 FetchImpl = Callable[[str], bytes]
@@ -53,13 +54,23 @@ def open_zip(buf: bytes) -> zipfile.ZipFile:
 
 def read_entry(zf: zipfile.ZipFile, name: str, manifest: dict) -> bytes | None:
     """Extract one named entry; record present/missing + size in the
-    manifest (S3, src/etl.js:81-87)."""
+    manifest (S3, src/etl.js:81-87).
+
+    An entry that cannot be extracted degrades to `partial` with the error
+    as its note and reads as None, so the rest of the audit still runs:
+    a corrupt entry (`BadZipFile`: bad CRC-32, bad local header; `zlib`
+    errors in the deflate stream), an unsupported compression method
+    (`NotImplementedError`) or an encrypted one (`RuntimeError`)."""
     try:
         info = zf.getinfo(name)
     except KeyError:
         manifest[name] = {"status": "missing"}
         return None
-    data = zf.read(info)
+    try:
+        data = zf.read(info)
+    except (zipfile.BadZipFile, zlib.error, NotImplementedError, RuntimeError) as e:
+        manifest[name] = {"status": "partial", "note": str(e)}
+        return None
     manifest[name] = {"status": "present", "size": len(data)}
     return data
 

@@ -9,12 +9,18 @@ see the arithmetic notes inline.
 
 from __future__ import annotations
 
+import io
+import struct
+import zipfile
+
 import pytest
 
+from seo_audit_etl_actor_spark import session
 from seo_audit_etl_actor_spark.pipeline import stanzas
 from seo_audit_etl_actor_spark.pipeline.document import to_reference_json
 from seo_audit_etl_actor_spark.pipeline.run import JobInput, process_zip, write_outputs
-from seo_audit_etl_actor_spark.sources.zip_io import NotAZipError
+from seo_audit_etl_actor_spark.sources.csv_smart import ParsedCsv
+from seo_audit_etl_actor_spark.sources.zip_io import NotAZipError, read_entry
 from tests.fixtures_seo import _csv, build_fixture_zip
 
 JOB = JobInput(client="Acme Plumbing", domain="acme.example", run_date="2025-06-01", zip_url="memory://fixture")
@@ -170,6 +176,64 @@ def test_corrupt_nested_zip_degrades_to_partial(spark):
     assert res["normalized_audit"]["onsite"]["errors"]["orphan_pages"] == 0
 
 
+def _patch_central_entry(buf: bytes, name: str, offset: int, value: bytes) -> bytes:
+    """`buf` with `value` written at `offset` of `name`'s central-directory
+    record (8: flag bits, 10: compression method, 16: CRC-32); zipfile
+    reads an entry by that record."""
+    start = buf.find(b"PK\x01\x02")
+    while start >= 0:
+        name_len = struct.unpack_from("<H", buf, start + 28)[0]
+        if buf[start + 46 : start + 46 + name_len] == name.encode():
+            at = start + offset
+            return buf[:at] + value + buf[at + len(value) :]
+        start = buf.find(b"PK\x01\x02", start + 46)
+    raise KeyError(name)
+
+
+def _flip_crc(buf: bytes, name: str) -> bytes:
+    with zipfile.ZipFile(io.BytesIO(buf)) as zf:
+        flipped = zf.getinfo(name).CRC ^ 0xFF
+    return _patch_central_entry(buf, name, 16, struct.pack("<I", flipped))
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["sf_internal_all.csv", "ahrefs_site_audit.zip", "lighthouse_home.json", "gsc_queries_28d.csv"],
+)
+def test_crc_corrupt_entry_degrades_to_partial(spark, name):
+    """A CRC-corrupt outer entry — a CSV stanza, the nested site-audit ZIP,
+    a Lighthouse JSON, a login-required placeholder — no longer aborts the
+    audit: its manifest entry reads `partial` with the zipfile error as
+    note, and every other artifact value equals a run without that entry."""
+    corrupt = process_zip(spark, JOB, fetch_impl=lambda url: _flip_crc(build_fixture_zip(), name))
+    omitted = process_zip(spark, JOB, fetch_impl=lambda url: build_fixture_zip(omit={name}))
+    entry = corrupt["manifest"].pop(name)
+    assert entry == {"status": "partial", "note": entry["note"]} and "CRC" in entry["note"]
+    assert omitted["manifest"].pop(name) == {"status": "missing"}
+    assert corrupt == omitted
+
+
+@pytest.mark.parametrize(
+    ("offset", "value", "error"),
+    [
+        pytest.param(10, struct.pack("<H", 99), "compression method is not supported", id="method"),
+        pytest.param(8, struct.pack("<H", 0x1), "password required", id="encrypted"),
+    ],
+)
+def test_read_entry_degrades_unreadable_entries(offset, value, error):
+    """`read_entry` turns an entry with an unsupported compression method,
+    or an encrypted one, into a `partial` manifest entry noting the error,
+    and returns None; the other entries still read."""
+    name = "sf_duplicates.csv"
+    buf = _patch_central_entry(build_fixture_zip(), name, offset, value)
+    manifest: dict = {}
+    with zipfile.ZipFile(io.BytesIO(buf)) as zf:
+        assert read_entry(zf, name, manifest) is None
+        assert read_entry(zf, "ahrefs_backlinks.csv", manifest) is not None
+    assert manifest[name]["status"] == "partial" and error in manifest[name]["note"], manifest
+    assert manifest["ahrefs_backlinks.csv"]["status"] == "present"
+
+
 def test_missing_keywords_entry(spark):
     res = process_zip(
         spark, JOB, fetch_impl=lambda url: build_fixture_zip(omit={"ahrefs_keywords.csv"})
@@ -282,6 +346,75 @@ def test_audit_runs_two_spark_queries(spark, monkeypatch):
     [frame] = frames
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_audit_runs_one_job_of_one_task(spark, monkeypatch):
+    """A warm audit of the golden fixture (about 40 aggregated rows) runs
+    exactly 1 Spark job of 1 task: its audit frame is one partition, so the
+    audit query's partial and final aggregates run in one stage with no
+    `Exchange`, and the scoring projection is folded on the driver. Every
+    query is collected, not `first()`-ed, so none is planned twice."""
+
+    def fetch(url):
+        return build_fixture_zip()
+
+    process_zip(spark, JOB, fetch_impl=fetch)  # warm-up
+    queries = []
+    DataFrame = type(spark.range(0))  # the session's concrete DataFrame class
+    collect = DataFrame.collect
+
+    def recording(self):
+        queries.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", recording)
+    monkeypatch.setattr(DataFrame, "first", lambda self: pytest.fail("first() re-plans the query"))
+    sc = spark.sparkContext
+    group = "test-audit-one-task"
+    sc.setJobGroup(group, group)
+    try:
+        process_zip(spark, JOB, fetch_impl=fetch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(jobs[0]).stageIds]
+    assert sum(s.numTasks for s in stages) == 1, stages
+    stanza_query, _scoring_query = queries
+    plan = stanza_query._jdf.queryExecution().executedPlan().toString()
+    assert "Aggregate" in plan and "Exchange" not in plan, plan
+
+
+def test_audit_frame_partitions_by_rows(spark, monkeypatch):
+    """The audit frame gets one partition per `ROWS_PER_PARTITION` rows,
+    at least one and at most `defaultParallelism`, whichever way Spark
+    holds it; a frame no larger than the constant is one partition."""
+    per = 10
+    monkeypatch.setattr(session, "ROWS_PER_PARTITION", per)
+    cores = spark.sparkContext.defaultParallelism
+
+    def partitions(n: int) -> int:
+        parsed = ParsedCsv(header=["x"], rows=[[str(i)] for i in range(n)])
+        return stanzas.audit_frame(spark, [("t", parsed, [0])]).rdd.getNumPartitions()
+
+    assert partitions(1) == 1
+    assert partitions(per) == 1
+    assert partitions(per + 1) == min(2, cores)
+    assert partitions(per * (cores + 3)) == cores
+    # Past the Arrow local-relation threshold the frame is an RDD with one
+    # partition per Arrow batch (here per part): capped all the same.
+    parts = [(f"t{i}", ParsedCsv(header=["x"], rows=[["v"]] * per), [0]) for i in range(cores + 3)]
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    spark.conf.set(key, "0")
+    try:
+        df = stanzas.audit_frame(spark, parts)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset(key)
+    assert "ExistingRDD" in plan and df.rdd.getNumPartitions() == cores, plan
 
 
 def test_validation_rejects_blank_input():

@@ -211,17 +211,23 @@ def _parsed_csvs(draw) -> ParsedCsv:
 )
 @example(parsed=ParsedCsv(header=["ключ", "x"], rows=[]))
 def test_to_dataframe_round_trips_parsed_rows(spark, parsed):
-    """The Arrow-built audit frame, every column picked, holds exactly the
-    parsed cells in ingest order — a missing cell stays NULL, an empty one
-    stays '' — under the all-string slot schema with a non-null `__stanza`
-    tag and `__row_id`."""
-    df = audit_frame(spark, [("t", parsed, range(len(parsed.header)))])
+    """The Arrow-built audit frame holds exactly the parsed cells in ingest
+    order — a missing cell stays NULL, an empty one stays '' — under the
+    all-string slot schema with a non-null `__stanza` tag and `__row_id`.
+    Two parts of the same rows: `t` picks every column, `u` picks the last
+    one and a header-missing input (None position); a slot past a part's
+    positions reads NULL."""
+    last = len(parsed.header) - 1
+    width = max(len(parsed.header), 2)
+    df = audit_frame(spark, [("t", parsed, range(len(parsed.header))), ("u", parsed, (last, None))])
     assert df.schema == T.StructType(
         [T.StructField(TAG, T.StringType(), False), T.StructField(ROW_ID, T.LongType(), False)]
-        + [T.StructField(f"__c{i}", T.StringType(), True) for i in range(len(parsed.header))]
+        + [T.StructField(f"__c{i}", T.StringType(), True) for i in range(width)]
     )
-    got = [tuple(r) for r in df.orderBy(ROW_ID).collect()]
-    assert got == [("t", i, *row) for i, row in enumerate(parsed.rows)]
+    pad_t, pad_u = [None] * (width - len(parsed.header)), [None] * (width - 2)
+    want = [("t", i, *row, *pad_t) for i, row in enumerate(parsed.rows)]
+    want += [("u", i, row[last], None, *pad_u) for i, row in enumerate(parsed.rows)]
+    assert [tuple(r) for r in df.collect()] == want
 
 
 def test_fixture_frames_plan_as_local_table_scans(spark):

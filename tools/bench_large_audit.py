@@ -10,8 +10,15 @@ keyword buckets, referring domains, mean DR, 4xx/5xx counts and
 pages_total are checked against values this script computes from the
 planted cells with the reference's rules (JS `toNum`: strip everything
 but `[0-9.-]`, '' → 0, malformed → NaN). Prints one JSON line
-{"rows", "seed", "seconds", "correct", "mismatches"}; exits 1 when a
-value is wrong.
+{"rows", "seed", "seconds", "layers", "main_peak_rss_mb", "correct",
+"mismatches"}; exits 1 when a value is wrong.
+
+`layers` splits the timed audit into seconds spent in ZIP reads
+(`open_zip`, `read_entry`), CSV decode and parse, the audit-frame build
+(`stanzas.audit_frame`, the Arrow handoff included), the stanza query
+(the rest of `stanzas.aggregate_audit`: plan, execute, apply) and
+scoring. `main_peak_rss_mb` is this process's peak resident set
+(`ru_maxrss`); the JVM is a child process and not counted.
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ import json
 import os
 import random
 import re
+import resource
 import sys
 import time
 import zipfile
@@ -107,14 +115,48 @@ def check(doc: dict, expected: dict) -> list[str]:
     return bad
 
 
+class _Layers:
+    """Seconds per layer, accumulated by wrapping the functions the
+    pipeline calls through module globals."""
+
+    def __init__(self) -> None:
+        self.seconds: dict[str, float] = {}
+
+    def wrap(self, module, attr: str, layer: str) -> None:
+        fn = getattr(module, attr)
+
+        def timed(*args, **kwargs):
+            t0 = time.perf_counter()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                self.seconds[layer] = self.seconds.get(layer, 0.0) + time.perf_counter() - t0
+
+        setattr(module, attr, timed)
+
+    def split(self) -> dict[str, float]:
+        s = {k: self.seconds.get(k, 0.0) for k in ("zip_read", "csv_parse", "frame_build", "stanzas", "scoring")}
+        s["stanza_query"] = s.pop("stanzas") - s["frame_build"]
+        return {f"{k}_s": round(v, 3) for k, v in s.items()}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--rows", type=int, default=500_000, help="rows per large export")
     ap.add_argument("--seed", type=int, default=7)
     ns = ap.parse_args()
 
+    from seo_audit_etl_actor_spark.pipeline import run, stanzas
     from seo_audit_etl_actor_spark.pipeline.run import JobInput, process_zip
     from seo_audit_etl_actor_spark.session import get_spark
+
+    layers = _Layers()
+    layers.wrap(run, "open_zip", "zip_read")
+    layers.wrap(run, "read_entry", "zip_read")
+    layers.wrap(run, "parse_csv_smart_rows", "csv_parse")
+    layers.wrap(stanzas, "audit_frame", "frame_build")
+    layers.wrap(stanzas, "aggregate_audit", "stanzas")
+    layers.wrap(run, "compute_scores", "scoring")
 
     spark = get_spark("bench-large-audit")
     spark.sparkContext.setLogLevel("ERROR")
@@ -124,11 +166,14 @@ def main() -> None:
     process_zip(spark, job, fetch_impl=lambda url: warm)
 
     payload, expected = build_zip(ns.rows, ns.seed)
+    layers.seconds.clear()
     t0 = time.perf_counter()
     result = process_zip(spark, job, fetch_impl=lambda url: payload)
     seconds = time.perf_counter() - t0
     bad = check(result["normalized_audit"], expected)
+    peak_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
     print(json.dumps({"rows": ns.rows, "seed": ns.seed, "seconds": round(seconds, 3),
+                      "layers": layers.split(), "main_peak_rss_mb": round(peak_mb, 1),
                       "correct": not bad, "mismatches": bad}))
     spark.stop()
     sys.exit(1 if bad else 0)
